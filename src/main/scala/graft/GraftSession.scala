@@ -21,6 +21,12 @@ object GraftSession {
       // the LTZ type every operator and oracle was written against.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
+      // The JVM-wide cache of generated classes holds 100 by default. A
+      // cold curation pass alone compiles ~135 distinct classes (sf0.001,
+      // counted with this cache), so at 100 the LRU cycled through the
+      // recipe and every pass recompiled most of it. 2000 holds the
+      // recipe's working set with room for what else the session runs.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
     extraConfigs.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()

@@ -90,13 +90,7 @@ object One {
       }
     }
     println(f"[sentinel] post: ${sentinel()}%.3f s")
-    outDir.foreach { d =>
-      val q = (s: String) => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replace("\n", "\\n").replace("\t", "\\t") + "\""
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$d/oracle_sql.json"),
-        SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
-          .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
-    }
+    outDir.foreach(Verify.writeOracleSql(_, names.toSet))
     spark.stop()
   }
 }

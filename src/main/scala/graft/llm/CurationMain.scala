@@ -29,9 +29,13 @@ import graft.{GraftSession, Tables}
   *   6. split            — deterministic sha-256 train/val/test
   *
   * Writes the curated corpus partitioned by split and prints one JSON
-  * funnel line (doc counts after every stage). Every stage is a lazy
-  * DataFrame transform — a single action materializes the funnel; at
-  * 100 TB the same plan runs unchanged with the drop-sets broadcast.
+  * funnel line (doc counts after every stage). Stages 1–5 each end at a
+  * stage barrier ([[barrier]]), so the next stage plans over a leaf scan
+  * of materialized rows and every plan covers one stage, not the
+  * recipe's whole ancestry. The funnel reads one count per stage, the
+  * two stripped-token sums and one per-split count off those barriers.
+  * The barriers keep no lineage: losing an executor fails the pass
+  * instead of recomputing the stage.
   */
 object CurationMain {
 
@@ -45,6 +49,18 @@ object CurationMain {
   private[graft] def nearDupDrops(spark: SparkSession, sfDir: String): DataFrame =
     PairGraph.jaccard(spark, sfDir, 0.8)
       .select(col("d2").as("doc_id")).distinct()
+
+  /** Stage barrier: materializes `df` now (eager `localCheckpoint`) and
+    * returns a frame whose plan is a leaf over those rows. A `.cache()`d
+    * stage keeps its ancestry in the plan instead — every
+    * `InMemoryTableScan` prints its relation's whole cached plan, and
+    * `exact` and `clean` read their input twice — so the descriptions
+    * Spark renders per execution and per AQE stage would grow with the
+    * whole recipe (tens of MB per pass on a 100-document corpus).
+    * Trade-off: the rows live only in executor block storage with no
+    * lineage behind them, so a lost executor fails the pass instead of
+    * recomputing the stage. */
+  private def barrier(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 
   /** The whole recipe as a function (spec-testable without the sink).
     * `dupRunMinTokens` is the span-stage cut threshold (stages 4a and
@@ -61,7 +77,7 @@ object CurationMain {
     val bounds = docs.agg(
       expr("percentile(n_chars, 0.05)").as("p05"),
       expr("percentile(n_chars, 0.95)").as("p95"))
-    val qual = docs.crossJoin(broadcast(bounds))
+    val qual = barrier(docs.crossJoin(broadcast(bounds))
       .filter(col("n_chars") >= col("p05") && col("n_chars") <= col("p95"))
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= 3)
@@ -70,14 +86,13 @@ object CurationMain {
             |  sequence(1, size(toks) - 2),
             |  i -> concat_ws(' ', slice(toks, i, 3)))))""".stripMargin)
           / (size(col("toks")) - 2) <= 0.2)
-      .drop("toks")
-      .cache()
+      .drop("toks"))
 
     // 2. exact dedup: keep the lowest doc_id per content hash
     val canonical = qual.groupBy(sha2(col("text"), 256).as("h"))
       .agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
-    val exact = qual.join(canonical, Seq("doc_id"), "left_semi").cache()
+    val exact = barrier(qual.join(canonical, Seq("doc_id"), "left_semi"))
 
     // 3. near-dup: exact Jaccard ≥ 0.8 pairs read from the PERSISTED
     // pair graph (round 10 — the warm path the fifteen diagnostics
@@ -95,8 +110,8 @@ object CurationMain {
     // similarity), and it removes the LSH path's banding miss
     // (P ≈ 1e-5/pair) as a side effect. CurationSpec pins equality
     // of the two drop sets on the current fixture.
-    val near = exact.join(broadcast(nearDupDrops(spark, sfDir)),
-      Seq("doc_id"), "left_anti").cache()
+    val near = barrier(exact.join(broadcast(nearDupDrops(spark, sfDir)),
+      Seq("doc_id"), "left_anti"))
 
     // 4a. SPAN decontamination (round-14 verdict Next #8 — the q414
     // screen as removal predicates): verbatim >= threshold-token runs
@@ -108,8 +123,8 @@ object CurationMain {
     // the train frame single-sided. CurationSpec pins the
     // one-sidedness on a planted span.
     val bench = docs.filter(col("doc_id") % 50 === 0)
-    val stripped = DupRunStore.stripSharedSpansServed(spark, sfDir,
-      near.filter(col("doc_id") % 50 =!= 0), dupRunMinTokens).cache()
+    val stripped = barrier(DupRunStore.stripSharedSpansServed(spark, sfDir,
+      near.filter(col("doc_id") % 50 =!= 0), dupRunMinTokens))
     def sumLong(d: DataFrame, c: String): Long =
       Option(d.agg(sum(col(c))).head.get(0)).fold(0L)(_.asInstanceOf[Long])
     val decontamTok = sumLong(stripped, "n_removed")
@@ -128,9 +143,8 @@ object CurationMain {
     val contaminated = grams(stripped)
       .join(broadcast(benchGrams), Seq("g"))
       .select(col("doc_id")).distinct()
-    val clean = stripped.drop("n_removed")
-      .join(broadcast(contaminated), Seq("doc_id"), "left_anti")
-      .cache()
+    val clean = barrier(stripped.drop("n_removed")
+      .join(broadcast(contaminated), Seq("doc_id"), "left_anti"))
 
     // 5. within-corpus ExactSubstr cut (q420's transform, Lee et al.
     // 2022): keep each duplicated run's first site, strip the rest —
@@ -143,7 +157,7 @@ object CurationMain {
     // no longer duplicated here — cutting it against pre-filter state
     // would destroy unique text. CurationSpec constructs exactly that
     // disagreement; swapping this for a catalogSites read fails it.
-    val cut = DupRunStore.exactSubstrCut(clean, dupRunMinTokens).cache()
+    val cut = barrier(DupRunStore.exactSubstrCut(clean, dupRunMinTokens))
     val cutTok = sumLong(cut, "n_removed")
     val cleanCut = cut.drop("n_removed")
       .withColumn("n_chars", length(col("text")).cast("long"))

@@ -720,13 +720,14 @@ object EventStreams {
   }
 
   /** LIVE duplicated-run catalog maintenance — the streaming twin of
-    * q418's batch [[graft.llm.DupRunStore.runIvmStep]] (the round-14
-    * verdict's last store-parity gap): each micro-batch of documents
-    * (doc_id, source, text) lands its doc/posting state and signed
-    * run-catalog deltas replay-idempotently into `gen=<batchId>`
-    * partition dirs. Retroactive run creation — a streamed doc
-    * flipping a shingle's df from 1 to ≥ 2 creates runs in documents
-    * from EARLIER micro-batches — rides the same state-only delta
+    * q418's batch demo write path (`DupRunStore.demoLifecycle`; the
+    * round-14 verdict's last store-parity gap): each micro-batch of
+    * documents (doc_id, source, text) lands its doc/posting state and
+    * signed run-catalog deltas replay-idempotently into `gen=<batchId>`
+    * partition dirs ([[graft.llm.DupRunStore.runIvmStreamStep]]).
+    * Retroactive run creation — a streamed doc flipping a shingle's df
+    * from 1 to ≥ 2 creates runs in documents from EARLIER
+    * micro-batches — rides the same state-only delta
     * derivation as batch maintenance (DupRunStreamSpec pins
     * maintained ≡ rebuilt, the retro path actually firing, and
     * commit-window replay idempotence). */
